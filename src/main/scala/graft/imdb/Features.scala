@@ -30,24 +30,23 @@ object Features {
 
   val categoricalCols: Seq[String] = Seq("writer", "director", "genre", "decade")
 
-  /** M1: fit one StringIndexer per categorical col on TRAIN ONLY —
-    * frequencyDesc order, handleInvalid=keep (unseen -> numLabels),
-    * exactly the reference's semantics (data_utils.py:267-298). */
-  def fitIndexers(train: DataFrame): Map[String, StringIndexerModel] =
-    categoricalCols.map { c =>
-      c -> new StringIndexer()
-        .setInputCol(c).setOutputCol(s"${c}_index")
-        .setHandleInvalid("keep")
-        .fit(train.na.fill("unknown", Seq(c)))
-    }.toMap
+  /** M1: fit ONE multi-column StringIndexer on TRAIN ONLY — one
+    * aggregation job for all categorical columns. frequencyDesc order
+    * (ties alphabetical, the same sort Spark uses for a single column),
+    * handleInvalid=keep (unseen -> numLabels), exactly the reference's
+    * semantics (data_utils.py:267-298). */
+  def fitIndexers(train: DataFrame): StringIndexerModel =
+    new StringIndexer()
+      .setInputCols(categoricalCols.toArray)
+      .setOutputCols(categoricalCols.map(c => s"${c}_index").toArray)
+      .setHandleInvalid("keep")
+      .fit(train.na.fill("unknown", categoricalCols))
 
-  /** M2: apply fitted indexers, drop source columns
+  /** M2: apply the fitted indexer, drop source columns
     * (classifier_pipeline.py:384-396). */
-  def applyIndexers(df: DataFrame,
-                    models: Map[String, StringIndexerModel]): DataFrame =
-    categoricalCols.foldLeft(df) { (d, c) =>
-      models(c).transform(d.na.fill("unknown", Seq(c))).drop(c)
-    }
+  def applyIndexers(df: DataFrame, model: StringIndexerModel): DataFrame =
+    model.transform(df.na.fill("unknown", categoricalCols))
+      .drop(categoricalCols: _*)
 
   /** M3: assemble the ordered feature vector; upstream nulls must
     * already be patched (P9's na.fill(0) is applied here as the last

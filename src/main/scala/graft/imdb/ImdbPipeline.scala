@@ -67,11 +67,11 @@ object ImdbPipeline {
 
   /** Stage 3 for one set: metadata merge + genre enrichment + decade +
     * extra-data columns (classifier_pipeline.py:320-410). */
-  private def engineer(spark: SparkSession, df: DataFrame, writing: DataFrame,
-                       directing: DataFrame, cache: DataFrame, cfg: Config,
+  private def engineer(spark: SparkSession, df: DataFrame, topW: DataFrame,
+                       topD: DataFrame, cache: DataFrame, cfg: Config,
                        extra: Option[DataFrame],
                        extraMeans: Map[String, Double]): (DataFrame, DataFrame) = {
-    val merged = Metadata.mergeMetadata(df, writing, directing)
+    val merged = Metadata.joinTopEntities(df, topW, topD)
     val (genres, fresh) =
       Enrichment.enrich(spark, merged, cache, cfg.predictor, cfg.batchSize)
     val withGenre = merged
@@ -96,7 +96,10 @@ object ImdbPipeline {
   }
 
   /** Full run: load -> preprocess -> engineer -> train -> predict ->
-    * sinks. Returns the prediction DataFrame (tconst, prediction). */
+    * sinks. Returns the prediction DataFrame (tconst, prediction).
+    * Frames read by several actions are persisted for the run only;
+    * the two fresh genre-prediction frames stay persisted, because the
+    * returned frame depends on them. */
   def run(spark: SparkSession, cfg: Config,
           onStage: (String, Double) => Unit = (_, _) => (),
           tap: (String, DataFrame) => Unit = (_, _) => ()): DataFrame = {
@@ -105,8 +108,8 @@ object ImdbPipeline {
     // (fits and sinks) — no extra count()s are injected, so the
     // measured run is the production run. Lazy evaluation means each
     // mark carries everything since the previous action (e.g.
-    // "fit_indexers" pays the whole train-side load+preprocess+
-    // engineer chain); ImdbScaleBench documents this attribution.
+    // "fit_indexers" pays the train-side load+preprocess+engineer
+    // chain, once); ImdbScaleBench documents this attribution.
     var lastMark = System.nanoTime()
     def mark(stage: String): Unit = {
       val now = System.nanoTime()
@@ -139,51 +142,58 @@ object ImdbPipeline {
       Cleaning.nonZeroMeans(e, Seq("popularity", "budget", "revenue")))
       .getOrElse(Map.empty)
 
-    // Stage 3: features (fit-on-train indexers + scaler)
-    val (trainFeat0, freshTrain) =
+    // Stage 3: features (fit-on-train indexers + scaler). The top-1
+    // frames serve both sets; each engineered set serves fits and sinks
+    val topW = Metadata.topEntityPerMovie(writing, "writer").persist()
+    val topD = Metadata.topEntityPerMovie(directing, "director").persist()
+    val (trainEng, freshTrain) =
       engineer(spark, Cleaning.patchWithMean(trainPre, means),
-        writing, directing, cache, cfg, extra, extraMeans)
-    val (testFeat0, freshTest) =
+        topW, topD, cache, cfg, extra, extraMeans)
+    val (testEng, freshTest) =
       engineer(spark, Cleaning.patchWithMean(testPre, means),
-        writing, directing, cache.union(freshTrain), cfg, extra, extraMeans)
-    // observation hook (no-op by default): ImdbScaleCensus gates the
-    // engineered frames' census against a DuckDB recomputation at xN
-    tap("engineered_train", trainFeat0)
-    tap("engineered_test", testFeat0)
-    val indexers = Features.fitIndexers(trainFeat0)
-    mark("fit_indexers") // pays train-side load+preprocess+engineer
-    val trainIdx = Features.applyIndexers(trainFeat0, indexers)
-      .withColumn("label", col("label").cast("double"))
-    val testIdx = Features.applyIndexers(testFeat0, indexers)
-    val trainAsm = Features.assemble(trainIdx)
-    val scaler = Features.fitScaler(trainAsm)
-    mark("fit_scaler")
-    val trainScaled = Features.scale(trainAsm, scaler, cfg.legacyScaler)
-    val testScaled =
-      Features.scale(Features.assemble(testIdx), scaler, cfg.legacyScaler)
+        topW, topD, cache.union(freshTrain), cfg, extra, extraMeans)
+    val trainFeat0 = trainEng.persist()
+    val testFeat0 = testEng.persist()
+    try {
+      // observation hook (no-op by default): ImdbScaleCensus gates the
+      // engineered frames' census against a DuckDB recomputation at xN
+      tap("engineered_train", trainFeat0)
+      tap("engineered_test", testFeat0)
+      val indexers = Features.fitIndexers(trainFeat0)
+      mark("fit_indexers") // pays train-side load+preprocess+engineer once
+      val trainIdx = Features.applyIndexers(trainFeat0, indexers)
+        .withColumn("label", col("label").cast("double"))
+      val testIdx = Features.applyIndexers(testFeat0, indexers)
+      val trainAsm = Features.assemble(trainIdx)
+      val scaler = Features.fitScaler(trainAsm)
+      mark("fit_scaler")
+      val trainScaled = Features.scale(trainAsm, scaler, cfg.legacyScaler)
+      val testScaled =
+        Features.scale(Features.assemble(testIdx), scaler, cfg.legacyScaler)
 
-    // Stages 4-5: train, predict, emit (K3 model sink + K1 predictions)
-    val model: PipelineModel = ImdbModel.train(trainScaled, cfg.numTrees)
-    mark("train_rf")
-    cfg.modelDir.foreach(d => model.write.overwrite().save(d)) // K3
-    // M7: top-5 importances, like classifier_model.py:84-93
-    val top5 = ImdbModel.topImportances(model, Features.featureCols)
-      .map { case (n, v) => f"$n=$v%.6f" }.mkString(", ")
-    println(s"[imdb] top-5 feature importances: $top5")
-    val preds = ImdbModel.predict(model, testScaled)
-      .select(col("tconst"), col("prediction"))
-    // K1 (F9: timestamped {set}_{model}_{ts}.txt name unless pinned)
-    val predPath = cfg.resultPath.getOrElse(s"${cfg.resultsDir}/" +
-      predFileName(cfg.setName, cfg.modelName, java.time.LocalDateTime.now()))
-    Writers.savePredictionsTxt(preds, predPath)
-    mark("predict_write") // pays test-side engineer+transform+predict
-    println(s"[imdb] predictions written to $predPath")
-    // K2: persist the updated genre cache (old entries win on dup keys,
-    // data_utils.py:404-413); both fresh sets are persisted DataFrames,
-    // so this re-reads memoized results, not the LLM
-    Writers.saveGenreCache(cache, freshTrain.union(freshTest),
-      cfg.cacheOutDir.getOrElse(s"${cfg.resultsDir}/genre_cache"))
-    mark("cache_write")
-    preds
+      // Stages 4-5: train, predict, emit (K3 model sink + K1 predictions)
+      val model: PipelineModel = ImdbModel.train(trainScaled, cfg.numTrees)
+      mark("train_rf")
+      cfg.modelDir.foreach(d => model.write.overwrite().save(d)) // K3
+      // M7: top-5 importances, like classifier_model.py:84-93
+      val top5 = ImdbModel.topImportances(model, Features.featureCols)
+        .map { case (n, v) => f"$n=$v%.6f" }.mkString(", ")
+      println(s"[imdb] top-5 feature importances: $top5")
+      val preds = ImdbModel.predict(model, testScaled)
+        .select(col("tconst"), col("prediction"))
+      // K1 (F9: timestamped {set}_{model}_{ts}.txt name unless pinned)
+      val predPath = cfg.resultPath.getOrElse(s"${cfg.resultsDir}/" +
+        predFileName(cfg.setName, cfg.modelName, java.time.LocalDateTime.now()))
+      Writers.savePredictionsTxt(preds, predPath)
+      mark("predict_write") // pays test-side engineer once + transform+predict
+      println(s"[imdb] predictions written to $predPath")
+      // K2: persist the updated genre cache (old entries win on dup keys,
+      // data_utils.py:404-413); both fresh sets are persisted DataFrames,
+      // so this re-reads memoized results, not the LLM
+      Writers.saveGenreCache(cache, freshTrain.union(freshTest),
+        cfg.cacheOutDir.getOrElse(s"${cfg.resultsDir}/genre_cache"))
+      mark("cache_write")
+      preds
+    } finally Seq(testFeat0, trainFeat0, topD, topW).foreach(_.unpersist())
   }
 }

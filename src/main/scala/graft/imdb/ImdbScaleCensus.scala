@@ -51,10 +51,7 @@ object ImdbScaleCensus {
 
     var trainFeat: Option[DataFrame] = None
     val preds = ImdbPipeline.run(spark, cfg,
-      tap = (name, df) =>
-        if (name == "engineered_train")
-          trainFeat = Some(df.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+      tap = (name, df) => if (name == "engineered_train") trainFeat = Some(df))
     val tf = trainFeat.getOrElse(
       sys.error("tap never delivered the engineered train frame"))
 

@@ -9,10 +9,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Stage attribution (ImdbPipeline.run marks its natural action
   * boundaries; nothing extra is forced): `fit_indexers` pays the
-  * train-side load+preprocess+imputation+engineer chain, `fit_scaler`
-  * the assemble+scaler fit, `train_rf` the forest, `predict_write`
-  * the test-side engineer+transform+predict+K1 sink, `cache_write`
-  * the K2 cache union sink.
+  * train-side load+preprocess+imputation+engineer chain ONCE (it
+  * fills the persisted frames), `fit_scaler` the assemble+scaler fit,
+  * `train_rf` the forest over cached rows, `predict_write` the
+  * test-side engineer+transform+predict+K1 sink, `cache_write` the
+  * K2 cache union sink.
   *
   * Usage: runMain graft.tools.ImdbScaleBench <refImdbDir> <bigDir>
   *          <outJson> [factor-label]

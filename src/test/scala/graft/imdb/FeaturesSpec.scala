@@ -1,7 +1,9 @@
 package graft.imdb
 
 import graft.SparkSpec
+import org.apache.spark.ml.feature.StringIndexer
 import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 class FeaturesSpec extends SparkSpec {
@@ -56,5 +58,38 @@ class FeaturesSpec extends SparkSpec {
     val out = Features.applyIndexers(test, models)
       .select("writer_index").as[Double].collect().toSeq
     assert(out == Seq(1.0, 3.0)) // y = 2nd most frequent; q unseen -> 3
+  }
+
+  test("multi-column indexer fit == four single-column fits") {
+    import spark.implicits._
+    val rows: Seq[(Option[String], Option[String], Option[String], Option[String])] = Seq(
+      (Some("b"), Some("d2"), None, Some("1990s")),
+      (Some("a"), Some("d1"), Some("Drama"), None),
+      (Some("b"), None, Some("Drama"), Some("1990s")),
+      (Some("a"), Some("d1"), Some("Comedy"), Some("1980s")),
+      (None, Some("d2"), Some("Action"), Some("1980s")),
+      (Some("c"), None, None, Some("1990s")))
+    val train = rows.toDF(Features.categoricalCols: _*)
+    val multi = Features.fitIndexers(train).labelsArray.map(_.toSeq).toSeq
+    val single = Features.categoricalCols.map { c =>
+      new StringIndexer().setInputCol(c).setOutputCol(s"${c}_index")
+        .setHandleInvalid("keep")
+        .fit(train.na.fill("unknown", Seq(c))).labelsArray.head.toSeq
+    }
+    assert(multi == single)
+    // count ties break alphabetically; nulls count as "unknown"
+    assert(multi == Seq(
+      Seq("a", "b", "c", "unknown"),
+      Seq("d1", "d2", "unknown"),
+      Seq("Drama", "unknown", "Action", "Comedy"),
+      Seq("1990s", "1980s", "unknown")))
+    // unseen -> numLabels of its column; null -> "unknown"'s index
+    val test = Seq[(Option[String], Option[String], Option[String], Option[String])](
+      (Some("zz"), None, Some("Drama"), Some("2000s")))
+      .toDF(Features.categoricalCols: _*)
+    val out = Features.applyIndexers(test, Features.fitIndexers(train))
+      .select("writer_index", "director_index", "genre_index", "decade_index")
+      .head()
+    assert(out == Row(4.0, 2.0, 0.0, 3.0))
   }
 }

@@ -1,13 +1,16 @@
 package graft.imdb
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
 import org.apache.spark.sql.functions._
 
 /** End-to-end golden test (SURVEY.md §5): full pipeline on the
   * reference's committed fixtures with the committed LLM cache (zero
   * predictor calls) — asserts the output contract and the reference's
   * own accuracy bar on its own evaluation recipe. Slow (~2 min): tagged
-  * by name, runs in `sbt test`. */
+  * by name, runs in `sbt test`. Both cancel without the fixtures; the
+  * hermetic test runs the same contracts on a tiny generated input. */
 class ImdbPipelineSpec extends SparkSpec {
 
   private val dir = "/root/reference/imdb"
@@ -85,5 +88,109 @@ class ImdbPipelineSpec extends SparkSpec {
     val acc = ImdbModel.evaluateAccuracy(scaled, numTrees = 100)
     info(f"accuracy = $acc%.4f")
     assert(acc >= 0.75, f"accuracy $acc%.4f below the reference's 0.75 bar")
+  }
+
+  private val tinyTrain = (0 until 40).map(i => f"tt1$i%06d")
+  private val tinyValid = (0 until 12).map(i => f"tt2$i%06d")
+
+  /** A tiny input set with the reference's quirks (FIXTURES.md §A): a
+    * header that starts with a comma, `\N` sentinels and empty cells,
+    * two train files, a one-line JSON-array writing.json, a
+    * columns-orient directing.json and a genre cache that covers only
+    * part of both sets plus one movie of neither. */
+  private def writeTinyFixture(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_imdb_tiny")
+    def write(name: String, lines: Seq[String]): Unit =
+      java.nio.file.Files.writeString(dir.resolve(name), lines.mkString("", "\n", "\n"))
+    val header = ",tconst,primaryTitle,originalTitle,startYear,endYear," +
+      "runtimeMinutes,numVotes"
+    def row(i: Int, id: String): String = {
+      val year = if (i % 7 == 3) "\\N" else (1920 + 3 * i % 60).toString
+      val runtime = if (i % 5 == 1) "\\N" else (60 + 7 * i % 90).toString
+      val votes = if (i % 6 == 2) "" else s"${100.0 * (i + 1)}"
+      s"$i,$id,Title $i,Títle $i,$year,\\N,$runtime,$votes"
+    }
+    tinyTrain.zipWithIndex.grouped(20).zipWithIndex.foreach { case (part, f) =>
+      write(s"train-${f + 1}.csv", s"$header,label" +: part.map { case (id, i) =>
+        row(i, id) + (if (i % 3 == 0) ",True" else ",False")
+      })
+    }
+    write("validation_hidden.csv",
+      header +: tinyValid.zipWithIndex.map { case (id, i) => row(100 + i, id) })
+    val movies = (tinyTrain ++ tinyValid).zipWithIndex
+    write("writing.json", Seq(movies.filter(_._2 % 11 != 5).flatMap { case (m, i) =>
+      Seq(s"nm0${i % 5}", s"nm1${i % 3}")
+        .map(w => s"""{"movie":"$m","writer":"$w"}""")
+    }.mkString("[", ",", "]")))
+    val directing = movies.filter(_._2 % 9 != 4)
+      .map { case (m, i) => (m, s"nm2${i % 4}") }.zipWithIndex
+    def column(f: ((String, String)) => String) =
+      directing.map { case (p, k) => s""""$k":"${f(p)}"""" }.mkString("{", ",", "}")
+    write("directing.json",
+      Seq(s"""{"movie":${column(_._1)},"director":${column(_._2)}}"""))
+    val cached = tinyTrain.filter(_.last % 2 == 0) ++
+      tinyValid.filter(_.last % 3 == 0) :+ "tt9000000"
+    write("genre_cache.csv", "tconst,genre" +:
+      cached.zipWithIndex.map { case (m, i) =>
+        s"$m,${Enrichment.MovieGenres(i % Enrichment.MovieGenres.size)}"
+      })
+    dir.toString
+  }
+
+  test("hermetic: tiny input keeps K1/K2 and releases the run's caches") {
+    val dir = writeTinyFixture()
+    val out = s"$dir/out"
+    val cfg = ImdbPipeline.Config(
+      trainGlob = s"$dir/train-*.csv",
+      testCsv = s"$dir/validation_hidden.csv",
+      writingJson = s"$dir/writing.json",
+      directingJson = s"$dir/directing.json",
+      cacheCsv = s"$dir/genre_cache.csv",
+      resultsDir = out,
+      numTrees = 3,
+      resultPath = Some(s"$out/predictions"),
+      cacheOutDir = Some(s"$out/genre_cache"))
+    val cm = spark.sharedState.cacheManager
+    def cached(df: DataFrame): Boolean =
+      cm.lookupCachedData(df.asInstanceOf[ClassicDataset[_]]).isDefined
+    // rebuilt from the inputs: the cache manager matches plans by
+    // result, so these find the run's own top-1 frames
+    def topFrames = Seq(
+      Metadata.topEntityPerMovie(Readers.loadWriting(spark, cfg.writingJson), "writer"),
+      Metadata.topEntityPerMovie(
+        Readers.loadDirecting(spark, cfg.directingJson), "director"))
+    val tapped = scala.collection.mutable.Map[String, DataFrame]()
+    val cachedAtTap = scala.collection.mutable.Map[String, Boolean]()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+    val preds = ImdbPipeline.run(spark, cfg, tap = { (name, df) =>
+      tapped(name) = df
+      cachedAtTap(name) = cached(df)
+      cachedAtTap("top_frames") = topFrames.forall(cached)
+    })
+    assert(cachedAtTap == Map("engineered_train" -> true,
+      "engineered_test" -> true, "top_frames" -> true))
+    // released on exit, except the two fresh-prediction frames
+    assert(!tapped.values.exists(cached))
+    assert(!topFrames.exists(cached))
+    assert(spark.sparkContext.getPersistentRDDs.size == rddsBefore + 2)
+
+    // K1: one True/False line per validation movie, in tconst order
+    val txt = new java.io.File(s"$out/predictions").listFiles()
+      .filter(_.getName.endsWith(".txt"))
+    assert(txt.length == 1)
+    val lines = scala.io.Source.fromFile(txt.head).getLines().toSeq
+    val sorted = preds.orderBy("tconst").collect()
+    assert(sorted.map(_.getString(0)).toSeq == tinyValid)
+    assert(lines == sorted.map(r =>
+      if (r.getDouble(1) == 1.0) "True" else "False").toSeq)
+
+    // K2: unique per tconst, grown by exactly the uncached movies
+    val oldCache = Readers.loadGenreCache(spark, cfg.cacheCsv)
+    val newCache = Readers.loadGenreCache(spark, s"$out/genre_cache")
+    val uncached = (tinyTrain ++ tinyValid).toSet --
+      oldCache.select("tconst").collect().map(_.getString(0))
+    assert(uncached.nonEmpty)
+    assert(newCache.count() == oldCache.count() + uncached.size)
+    assert(newCache.select("tconst").distinct().count() == newCache.count())
   }
 }

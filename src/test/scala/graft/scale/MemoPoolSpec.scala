@@ -53,6 +53,51 @@ class MemoPoolSpec extends SparkSpec {
     } finally MemoPool.clear(spark)
   }
 
+  test("nested builds past a table resize: one build per key") {
+    // minhashPairs builds hashArrays inside its own build. Here each
+    // build nests the next key's getOrBuild, so up to 256 keys are
+    // mid-build while the inner inserts cross the map's resize
+    // threshold (0.75 x capacity, for any table of up to 256 bins). A
+    // build run inside computeIfAbsent throws "Recursive update" then.
+    val depth = 256
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def nested(i: Int): String =
+      MemoPool.getOrBuild(spark, "memo_pool_spec_nested", s"n$i") {
+        builds.incrementAndGet()
+        if (i == 0) "leaf" else nested(i - 1)
+      }(_ => Seq.empty)
+    MemoPool.clear(spark)
+    try {
+      var failure: Option[Throwable] = None
+      // a thread with a deep stack for the nested frames
+      val t = new Thread(null, () =>
+        try nested(depth) catch { case e: Throwable => failure = Some(e) },
+        "memo-pool-spec-nested", 64L << 20)
+      t.start()
+      t.join()
+      failure.foreach(throw _)
+      assert(builds.get == depth + 1)
+      assert(nested(depth) == "leaf") // memoized: no nesting, no build
+      assert(builds.get == depth + 1)
+      assert((0 to depth).map(i => s"n$i").toSet
+        .subsetOf(MemoPool.pooledNames(spark)))
+    } finally MemoPool.clear(spark)
+  }
+
+  test("a failed build leaves no entry; the next call builds again") {
+    MemoPool.clear(spark)
+    try {
+      intercept[IllegalStateException] {
+        MemoPool.getOrBuild[String](spark, "memo_pool_spec", "spec_fail") {
+          throw new IllegalStateException("build failed")
+        }(_ => Seq.empty)
+      }
+      assert(!MemoPool.pooledNames(spark).contains("spec_fail"))
+      assert(MemoPool.getOrBuild(spark, "memo_pool_spec", "spec_fail")(
+        "rebuilt")(_ => Seq.empty) == "rebuilt")
+    } finally MemoPool.clear(spark)
+  }
+
   test("clear unpersists and forgets") {
     val a = entry("spec_clear", 10L)
     a.count()
